@@ -20,24 +20,27 @@ Reference parity notes (each function cites the behavior it re-expresses):
     * default partition => MSCK .......... :212-218,233 (README.md:39-41)
     * uppercase rel. path => ADD ......... :219-228,234 (README.md:43-45)
     * both => fatal ...................... :231-232     (README.md:47-49)
+- one structured partition listing ........ ExtractHiveDDL.java:207
 - partition spec formatting k='v',k2='v2'  ExtractHiveDDL.java:263-276
 - USE_ADD_SQL / USE_CONTEXT config ....... ExtractHiveDDL.java:25,29,79-83
 - beeline !sh echo progress markers ...... ExtractHiveDDL.java:129,133
-- 32767-partition cap .................... removed (was :199,207); Spark's
-  SHOW PARTITIONS returns all partitions as a DataFrame.
+- 32767-partition cap .................... removed (was :199,207); the
+  session catalog's listPartitions returns every partition in one call.
 """
 
 from __future__ import annotations
 
-import contextlib
 import re
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 DEFAULT_PARTITION_KEYWORD = "__HIVE_DEFAULT_PARTITION__"
+
+# One partition's ((column, value), ...) in partition-column order, values
+# unescaped (``it's``, not the directory name's ``it%27s``).
+PartitionSpec = tuple[tuple[str, str], ...]
 
 
 @dataclass
@@ -100,11 +103,17 @@ def strip_catalog_prefix(line: str) -> str:
     )
 
 
-def format_partition_spec(name: str) -> str:
-    """``k1=v1/k2=v2`` -> ``k1='v1',k2='v2'`` -- every value single-quoted as
-    a string, relying on implicit casts (ExtractHiveDDL.java:264-265)."""
-    parts = name.split("/")
-    return ",".join("{}='{}'".format(*p.split("=", 1)) for p in parts)
+def _sql_string(value: str) -> str:
+    """Escape ``value`` for the inside of a quoted SQL string literal: Spark
+    and Hive both read backslash escapes in '...' and "..." literals."""
+    return value.replace("\\", "\\\\").replace("'", "\\'").replace('"', '\\"')
+
+
+def format_partition_spec(spec: PartitionSpec) -> str:
+    """``(("k1", "v1"), ("k2", "v2"))`` -> ``k1='v1',k2='v2'`` -- every value
+    single-quoted as a string, relying on implicit casts
+    (ExtractHiveDDL.java:264-265)."""
+    return ",".join(f"{k}='{_sql_string(v)}'" for k, v in spec)
 
 
 def relative_location(location: str, table_path: str) -> str:
@@ -150,15 +159,16 @@ def msck_sql(db: str, table: str, use_context: bool) -> str:
 
 
 def add_partition_sql(
-    db: str, table: str, table_path: str, name: str, location: str, use_context: bool
+    db: str, table: str, table_path: str, spec: PartitionSpec, location: str,
+    use_context: bool,
 ) -> str:
     """One ALTER TABLE ... ADD PARTITION (...) LOCATION "..." line per
     partition (ExtractHiveDDL.java:263-276); location is relative under
     USE_CONTEXT, absolute otherwise (:268-274)."""
     qualified = table if use_context else f"{db}.{table}"
-    spec = format_partition_spec(name)
     loc = relative_location(location, table_path) if use_context else location
-    return f'ALTER TABLE {qualified} ADD PARTITION ({spec}) LOCATION "{loc}";'
+    return (f"ALTER TABLE {qualified} ADD PARTITION ({format_partition_spec(spec)}) "
+            f'LOCATION "{_sql_string(loc)}";')
 
 
 # --------------------------------------------------------------------------
@@ -167,7 +177,7 @@ def add_partition_sql(
 
 def list_databases(spark: SparkSession, pattern: str) -> list[str]:
     """R1: glob-matched database names, sorted for deterministic output."""
-    rows = spark.sql(f"SHOW DATABASES LIKE '{pattern}'").collect()
+    rows = spark.sql(f"SHOW DATABASES LIKE '{_sql_string(pattern)}'").collect()
     return sorted(r[0] for r in rows)
 
 
@@ -175,7 +185,7 @@ def list_tables(spark: SparkSession, db: str, pattern: str) -> list[str]:
     """R2: glob-matched table names; errors degrade to an empty list
     (ExtractHiveDDL.java:146-148). Excludes temp views (not catalog tables)."""
     try:
-        rows = spark.sql(f"SHOW TABLES IN `{db}` LIKE '{pattern}'").collect()
+        rows = spark.sql(f"SHOW TABLES IN `{db}` LIKE '{_sql_string(pattern)}'").collect()
         return sorted(r["tableName"] for r in rows if not r["isTemporary"])
     except Exception:
         return []
@@ -195,43 +205,27 @@ def get_create_ddl(spark: SparkSession, db: str, table: str) -> str:
     return "\n".join(lines).rstrip() + ";"
 
 
-def get_partitions(
-    spark: SparkSession, db: str, table: str, max_workers: int = 8,
-    rpc_gate: "threading.Semaphore | None" = None,
-) -> list[tuple[str, str]]:
-    """R7+R8: (partition-name, location) pairs. Names come from SHOW
-    PARTITIONS (same ``k=v/k2=v2`` format the metastore returns); locations
-    from DESCRIBE ... PARTITION. Non-partitioned tables -> empty list. No
-    32767 cap (reference: Short.MAX_VALUE, ExtractHiveDDL.java:199).
-
-    The location fetch is one driver->metastore RPC per partition, so it
-    runs on a thread pool (R21's machinery): at the reference's own
-    32k-partition ceiling a serial loop is 32k sequential round-trips per
-    table, which dominates extraction wall-clock; concurrent DESCRIBEs
-    overlap the RPC latency exactly like the reference's 8-thread
-    ForkJoinPool overlapped its Thrift calls. Results keep the sorted
-    SHOW PARTITIONS order regardless of completion order."""
-    try:
-        names = sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS `{db}`.`{table}`").collect())
-    except Exception:
-        return []  # not partitioned
-
-    def fetch_location(name: str) -> str:
-        spec = format_partition_spec(name)
-        # rpc_gate caps TOTAL in-flight DESCRIBEs across every table worker:
-        # extract_ddl's 8 table threads each opening an 8-thread pool would
-        # otherwise put max_workers^2 concurrent metastore RPCs in flight,
-        # where the reference's single ForkJoinPool never exceeded 8.
-        with rpc_gate or contextlib.nullcontext():
-            rows = spark.sql(
-                f"DESCRIBE FORMATTED `{db}`.`{table}` PARTITION ({spec})"
-            ).collect()
-        return next((r["data_type"] for r in rows if r["col_name"] == "Location"), "")
-
-    if len(names) <= 1 or max_workers <= 1:
-        return [(name, fetch_location(name)) for name in names]
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return list(zip(names, pool.map(fetch_location, names)))
+def get_partitions(spark: SparkSession, db: str, table: str) -> list[tuple[PartitionSpec, str]]:
+    """R7+R8: (spec, location) pairs from ONE listPartitions call on the
+    session's external catalog, as the reference reads them with one
+    listPartitions Thrift call (ExtractHiveDDL.java:207). ``spec`` is the
+    ordered ``((column, value), ...)`` tuple with the values unescaped;
+    ``location`` is the string DESCRIBE FORMATTED prints. Sorted by the
+    ``k=v/k2=v2`` text of the values. Non-partitioned tables -> empty
+    list. No 32767 cap (reference: Short.MAX_VALUE, :199)."""
+    jvm = spark._jvm
+    catalog = spark._jsparkSession.sharedState().externalCatalog()
+    to_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    columns = list(to_java(catalog.getTable(db, table).partitionColumnNames()))
+    if not columns:
+        return []
+    uri_to_string = jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.URIToString
+    parts = []
+    for p in to_java(catalog.listPartitions(db, table, jvm.scala.Option.empty())):
+        values = p.spec()
+        spec = tuple((c, values.apply(c)) for c in columns)
+        parts.append((spec, uri_to_string(p.location())))
+    return sorted(parts, key=lambda part: "/".join(f"{k}={v}" for k, v in part[0]))
 
 
 def get_table_location(spark: SparkSession, db: str, table: str) -> str:
@@ -244,17 +238,14 @@ def get_table_location(spark: SparkSession, db: str, table: str) -> str:
 # --------------------------------------------------------------------------
 
 def partition_restore_sql(
-    spark: SparkSession, db: str, table: str, cfg: ExtractConfig,
-    rpc_gate: "threading.Semaphore | None" = None,
+    spark: SparkSession, db: str, table: str, cfg: ExtractConfig
 ) -> list[str]:
     """R9-R17: the partition-restore block for one table."""
-    parts = get_partitions(
-        spark, db, table, max_workers=cfg.max_workers, rpc_gate=rpc_gate
-    )
+    parts = get_partitions(spark, db, table)
     if not parts:
         return []  # R9: empty short-circuit (ExtractHiveDDL.java:200-203)
     table_path = get_table_location(spark, db, table)
-    has_default = any(f"={DEFAULT_PARTITION_KEYWORD}" in name for name, _ in parts)
+    has_default = any(v == DEFAULT_PARTITION_KEYWORD for spec, _ in parts for _, v in spec)
     rels = [relative_location(loc, table_path) for _, loc in parts]
     # Deliberate deviation from the reference: it case-checks the raw
     # location (ExtractHiveDDL.java:219-228), but the stock default-partition
@@ -267,14 +258,13 @@ def partition_restore_sql(
     if not use_add:
         return [msck_sql(db, table, cfg.use_context)]
     return [
-        add_partition_sql(db, table, table_path, name, loc, cfg.use_context)
-        for name, loc in parts
+        add_partition_sql(db, table, table_path, spec, loc, cfg.use_context)
+        for spec, loc in parts
     ]
 
 
 def table_section(
-    spark: SparkSession, db: str, table: str, cfg: ExtractConfig,
-    rpc_gate: "threading.Semaphore | None" = None,
+    spark: SparkSession, db: str, table: str, cfg: ExtractConfig
 ) -> list[str]:
     """R19: banner + optional beeline marker + CREATE + partition block
     (ExtractHiveDDL.java:118-136)."""
@@ -286,7 +276,7 @@ def table_section(
     if cfg.beeline_markers:
         lines.append(f'!sh echo "Creating table: {table}...";')
     lines.append(get_create_ddl(spark, db, table))
-    partition_lines = partition_restore_sql(spark, db, table, cfg, rpc_gate=rpc_gate)
+    partition_lines = partition_restore_sql(spark, db, table, cfg)
     if partition_lines:
         if cfg.beeline_markers:
             lines.append(f'!sh echo "Creating partitions for table: {table}...";')
@@ -345,11 +335,8 @@ def extract_ddl(
         if cfg.use_context:
             out.append(f"USE {db};")
         out.append("")
-        rpc_gate = threading.BoundedSemaphore(cfg.max_workers)
         with ThreadPoolExecutor(max_workers=cfg.max_workers) as pool:
-            sections = pool.map(
-                lambda t: table_section(spark, db, t, cfg, rpc_gate=rpc_gate), tables
-            )
+            sections = pool.map(lambda t: table_section(spark, db, t, cfg), tables)
         for table, section in zip(tables, sections):
             done += 1
             if cfg.progress:

@@ -8,6 +8,8 @@ Spark's catalog and compare the emitted script structure.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from hive_ddl_extract_tool_spark.catalog.extractor import (
@@ -19,11 +21,14 @@ from hive_ddl_extract_tool_spark.catalog.extractor import (
     fix_create_table,
     format_partition_spec,
     get_partitions,
+    get_table_location,
     list_databases,
     list_tables,
     msck_sql,
     partition_restore_sql,
+    relative_location,
 )
+from tools.catalog_parity import HOSTILE_PARTITION_VALUES
 
 # --------------------------------------------------------------------------
 # Pure transforms
@@ -48,10 +53,17 @@ def test_fix_create_table_identity_cases():
 
 
 def test_format_partition_spec():
-    assert format_partition_spec("dt=2024-01-01") == "dt='2024-01-01'"
-    assert format_partition_spec("dt=2024-01-01/region=emea") == "dt='2024-01-01',region='emea'"
-    # values containing '=' keep everything after the first '='
-    assert format_partition_spec("k=a=b") == "k='a=b'"
+    assert format_partition_spec((("dt", "2024-01-01"),)) == "dt='2024-01-01'"
+    assert (
+        format_partition_spec((("dt", "2024-01-01"), ("region", "emea")))
+        == "dt='2024-01-01',region='emea'"
+    )
+    # values are taken whole: '=' and '/' are not separators
+    assert format_partition_spec((("k", "a=b"),)) == "k='a=b'"
+    assert format_partition_spec((("k", "a/b"),)) == "k='a/b'"
+    # quote and backslash are escaped inside the SQL string literal
+    assert format_partition_spec((("k", "it's"),)) == "k='it\\'s'"
+    assert format_partition_spec((("k", "a\\b"),)) == "k='a\\\\b'"
 
 
 def test_strategy_decision_table():
@@ -67,10 +79,14 @@ def test_strategy_decision_table():
 def test_sql_emission_context_variants():
     assert msck_sql("db1", "t1", use_context=True) == "MSCK REPAIR TABLE t1;"
     assert msck_sql("db1", "t1", use_context=False) == "MSCK REPAIR TABLE db1.t1;"
-    add_rel = add_partition_sql("db1", "t1", "/wh/t1", "dt=a/r=b", "/wh/t1/dt=a/r=b", True)
+    spec = (("dt", "a"), ("r", "b"))
+    add_rel = add_partition_sql("db1", "t1", "/wh/t1", spec, "/wh/t1/dt=a/r=b", True)
     assert add_rel == 'ALTER TABLE t1 ADD PARTITION (dt=\'a\',r=\'b\') LOCATION "dt=a/r=b";'
-    add_abs = add_partition_sql("db1", "t1", "/wh/t1", "dt=a/r=b", "/wh/t1/dt=a/r=b", False)
+    add_abs = add_partition_sql("db1", "t1", "/wh/t1", spec, "/wh/t1/dt=a/r=b", False)
     assert add_abs == 'ALTER TABLE db1.t1 ADD PARTITION (dt=\'a\',r=\'b\') LOCATION "/wh/t1/dt=a/r=b";'
+    # a user-set location may hold quotes; they stay inside the literal
+    odd = add_partition_sql("db1", "t1", "/wh/t1", spec, '/data/x"y\'z', True)
+    assert odd.endswith(' LOCATION "/data/x\\"y\\\'z";')
 
 
 # --------------------------------------------------------------------------
@@ -125,55 +141,57 @@ def test_list_databases_and_tables(spark, ddl_fixtures):
     assert list_tables(spark, "no_such_db", "*") == []
 
 
+def test_like_patterns_are_escaped(spark, ddl_fixtures):
+    """The CLI's glob arguments reach SHOW ... LIKE '...' as SQL string
+    literals: a quote or backslash in them must not end or alter the
+    literal (unescaped, list_databases raised ParseException and
+    list_tables silently returned [])."""
+    assert list_databases(spark, "it's*") == []
+    assert list_databases(spark, "ddl_db1|it's") == ["ddl_db1"]
+    assert list_tables(spark, "ddl_db1", "it's*|sales_2023") == ["sales_2023"]
+    assert list_tables(spark, "ddl_db1", "inv_*|a\\") == ["inv_2024"]
+
+
 def test_partition_enumeration(spark, ddl_fixtures):
     parts = get_partitions(spark, "ddl_db1", "part_lower")
-    assert [name for name, _ in parts] == [
-        "dt=2024-01-01/region=apac",
-        "dt=2024-01-01/region=emea",
-        "dt=2024-01-02/region=emea",
+    assert [spec for spec, _ in parts] == [
+        (("dt", "2024-01-01"), ("region", "apac")),
+        (("dt", "2024-01-01"), ("region", "emea")),
+        (("dt", "2024-01-02"), ("region", "emea")),
     ]
     assert all(loc for _, loc in parts)
     assert get_partitions(spark, "ddl_db1", "plain_t") == []
 
 
-def test_partition_location_fetch_is_concurrent(spark, ddl_fixtures):
-    """At the reference's own 32k-partition ceiling a serial DESCRIBE loop
-    is 32k sequential metastore round-trips per table, so get_partitions
-    must overlap them (R21's thread-pool machinery). Wrap spark.sql in a
-    latency shim that records in-flight DESCRIBE concurrency: the parallel
-    fetch must overlap calls (peak >= 2) while returning exactly the
-    serial result in the same sorted order."""
-    import threading
-    import time
+def test_partition_listing_is_one_catalog_call_per_table(spark, ddl_fixtures):
+    """get_partitions reads specs and locations with one listPartitions call
+    on the session's external catalog, an internal JVM API reached through
+    py4j; this pins that route. No DESCRIBE ... PARTITION or SHOW PARTITIONS
+    statement is issued, and the number of statements partition_restore_sql
+    issues does not grow with the table's partition count."""
     from unittest import mock
 
-    serial = get_partitions(spark, "ddl_db1", "part_lower", max_workers=1)
-    assert len(serial) == 3
-
-    lock = threading.Lock()
-    inflight = 0
-    peak = 0
+    per_partition = re.compile(
+        r"^\s*(DESC(RIBE)?\b.*\bPARTITION\s*\(|SHOW\s+PARTITIONS\b)", re.I | re.S
+    )
+    issued: list[str] = []
     orig = spark.sql
 
-    def slow_sql(q, *a, **k):
-        nonlocal inflight, peak
-        is_describe = q.startswith("DESCRIBE FORMATTED")
-        if is_describe:
-            with lock:
-                inflight += 1
-                peak = max(peak, inflight)
-            time.sleep(0.15)
-        try:
-            return orig(q, *a, **k)
-        finally:
-            if is_describe:
-                with lock:
-                    inflight -= 1
+    def recording_sql(q, *a, **k):
+        issued.append(q)
+        return orig(q, *a, **k)
 
-    with mock.patch.object(spark, "sql", side_effect=slow_sql):
-        parallel = get_partitions(spark, "ddl_db1", "part_lower", max_workers=8)
-    assert parallel == serial
-    assert peak >= 2, f"DESCRIBE FORMATTED calls never overlapped (peak={peak})"
+    cfg = ExtractConfig(use_add_sql=True)
+    counts = {}
+    with mock.patch.object(spark, "sql", side_effect=recording_sql):
+        extract_ddl(spark, "ddl_db1", "part_lower", None, cfg)
+        for table in ("part_upper", "part_lower"):  # 2 and 3 partitions
+            before = len(issued)
+            partition_restore_sql(spark, "ddl_db1", table, cfg)
+            counts[table] = len(issued) - before
+    assert issued
+    assert not [q for q in issued if per_partition.match(q)]
+    assert counts["part_upper"] == counts["part_lower"], counts
 
 
 def test_strategy_lower_default_msck(spark, ddl_fixtures):
@@ -261,8 +279,6 @@ def test_roundtrip_recreate(spark, ddl_fixtures):
 
 
 def test_relative_location_strips_leading_prefix_only():
-    from hive_ddl_extract_tool_spark.catalog.extractor import relative_location
-
     assert relative_location("/wh/t/dt=a", "/wh/t") == "dt=a"
     assert relative_location("/wh/t/dt=a", "/wh/t/") == "dt=a"
     # partition outside the table path stays absolute
@@ -320,6 +336,45 @@ def test_cli_contract(spark, ddl_fixtures, tmp_path):
     text = open(out).read()
     assert "CREATE DATABASE IF NOT EXISTS ddl_db2;" in text
     assert "other_t" in text
+
+
+def test_hostile_partition_values_round_trip(spark):
+    """Partition values whose directory names are escaped (quote, '/', '=',
+    '%', backslash, double quote, timestamp colons) survive extract ->
+    replay into a renamed database: the same SHOW PARTITIONS and the same
+    table-relative locations. tools/catalog_parity.py replays the same
+    values on a Derby Hive metastore."""
+    src, dst = "ddl_hostile_src", "ddl_hostile_dst"
+    vals = HOSTILE_PARTITION_VALUES
+    current_db = spark.catalog.currentDatabase()  # the script's USE changes it
+    spark.sql(f"CREATE DATABASE {src}")
+    try:
+        spark.sql(f"CREATE TABLE {src}.t (v INT, a STRING, b STRING) "
+                  "USING parquet PARTITIONED BY (a, b)")
+        rows = [(i, a, b) for i, (a, b) in enumerate(zip(vals, reversed(vals)))]
+        spark.createDataFrame(rows, "v INT, a STRING, b STRING").write.insertInto(f"{src}.t")
+        script = extract_ddl(spark, src, "*", None, ExtractConfig(use_add_sql=True))
+        assert script.count("ADD PARTITION") == len(vals)
+        body = "\n".join(
+            ln for ln in script.replace(src, dst).splitlines() if not ln.startswith("--")
+        )
+        for stmt in body.split(";"):
+            if stmt.strip():
+                spark.sql(stmt)
+
+        def listing(db):
+            root = get_table_location(spark, db, "t")
+            shown = [r[0] for r in spark.sql(f"SHOW PARTITIONS {db}.t").collect()]
+            return shown, [(spec, relative_location(loc, root))
+                           for spec, loc in get_partitions(spark, db, "t")]
+
+        restored = listing(dst)
+        assert restored == listing(src)
+        assert sorted(v for spec, _ in restored[1] for _, v in spec) == sorted(vals * 2)
+    finally:
+        spark.catalog.setCurrentDatabase(current_db)
+        spark.sql(f"DROP DATABASE IF EXISTS {src} CASCADE")
+        spark.sql(f"DROP DATABASE IF EXISTS {dst} CASCADE")
 
 
 # --------------------------------------------------------------------------
@@ -386,41 +441,3 @@ def test_analyze_table_feeds_cbo_statistics(spark, sf_dir):
             spark.conf.set("spark.sql.cbo.enabled", prev)
     finally:
         spark.sql("DROP TABLE IF EXISTS stats_probe")
-
-
-def test_partition_fetch_respects_shared_rpc_gate(spark, ddl_fixtures):
-    """The rpc_gate caps TOTAL in-flight DESCRIBEs: with a budget of 1 the
-    8-thread pool must never overlap calls -- the guard against the
-    nested-pool max_workers^2 RPC storm when extract_ddl's table workers
-    each fan out partition fetches."""
-    import threading
-    import time
-    from unittest import mock
-
-    lock = threading.Lock()
-    inflight = 0
-    peak = 0
-    orig = spark.sql
-
-    def slow_sql(q, *a, **k):
-        nonlocal inflight, peak
-        is_describe = q.startswith("DESCRIBE FORMATTED")
-        if is_describe:
-            with lock:
-                inflight += 1
-                peak = max(peak, inflight)
-            time.sleep(0.05)
-        try:
-            return orig(q, *a, **k)
-        finally:
-            if is_describe:
-                with lock:
-                    inflight -= 1
-
-    gate = threading.BoundedSemaphore(1)
-    with mock.patch.object(spark, "sql", side_effect=slow_sql):
-        parts = get_partitions(
-            spark, "ddl_db1", "part_lower", max_workers=8, rpc_gate=gate
-        )
-    assert len(parts) == 3
-    assert peak == 1, f"gate of 1 still overlapped DESCRIBEs (peak={peak})"

@@ -4,6 +4,7 @@ foundation every dedup/fingerprint oracle stands on."""
 
 from __future__ import annotations
 
+import re
 import string
 
 from hypothesis import given
@@ -17,19 +18,22 @@ from hive_ddl_extract_tool_spark.catalog.extractor import (
 )
 
 _ident = st.text(alphabet=string.ascii_lowercase + string.digits + "_", min_size=1, max_size=12)
+# partition values include the characters a SQL literal or a partition
+# directory name must escape
 _value = st.text(
-    alphabet=string.ascii_letters + string.digits + "-_.", min_size=1, max_size=12
+    alphabet=string.ascii_letters + string.digits + "-_. '\"\\,=/%:", min_size=1, max_size=12
 )
+# one k='v' clause of a spec; inside the quotes a backslash escapes any char
+_SPEC_CLAUSE = re.compile(r"([a-z0-9_]+)='((?:[^'\\]|\\.)*)'(?:,|$)")
 
 
 @given(st.lists(st.tuples(_ident, _value), min_size=1, max_size=4))
 def test_format_partition_spec_structure(kvs):
-    name = "/".join(f"{k}={v}" for k, v in kvs)
-    spec = format_partition_spec(name)
-    parts = spec.split(",")
-    assert len(parts) == len(kvs)
-    for (k, v), part in zip(kvs, parts):
-        assert part == f"{k}='{v}'"
+    spec = format_partition_spec(tuple(kvs))
+    clauses = list(_SPEC_CLAUSE.finditer(spec))
+    assert "".join(m.group(0) for m in clauses) == spec
+    parsed = [(m.group(1), re.sub(r"\\(.)", r"\1", m.group(2))) for m in clauses]
+    assert parsed == kvs
 
 
 @given(_ident, _ident)

@@ -17,7 +17,10 @@ USE_CONTEXT path (USE db + unqualified names + relative partition
 locations) and the use_context=False path (qualified `db.table` names +
 ABSOLUTE partition locations, ExtractHiveDDL.java:268-274's other branch)
 on an external table whose location is db-neutral, so the same fixpoint
-criterion applies across the rename.
+criterion applies across the rename. A third arm replays a two-level
+table whose partition values need escaping (HOSTILE_PARTITION_VALUES):
+quotes, backslash, '/', '=', '%' and timestamp colons must come back as
+the same partitions at the same table-relative locations.
 
 Runs in a subprocess because spark.sql.catalogImplementation is static
 per JVM (the caller's session uses the in-memory catalog); the same
@@ -37,6 +40,13 @@ import textwrap
 import time
 
 REPO = "/root/repo"
+
+# Partition values that the metastore's directory names escape and that a
+# SQL string literal must escape; tests/test_catalog_ddl.py replays the
+# same values on the in-memory catalog.
+HOSTILE_PARTITION_VALUES = (
+    "it's", "a/b", "x=y", "50%", "back\\slash", 'dq"q', "2024-01-01 00:00:00",
+)
 
 
 def scenario_script(workdir: str) -> str:
@@ -116,6 +126,39 @@ def scenario_script(workdir: str) -> str:
         assert [r[0] for r in spark.sql("SHOW PARTITIONS dbdstq.t").collect()] == ["dt=x", "dt=y"]
         dst2 = extract_ddl(spark, "dbdstq", "*", None, cfg_abs)
         assert canon(add2, "dbsrcq") == canon(dst2, "dbdstq"), (add2, dst2)
+
+        # Third arm -- hostile partition values on a two-level Hive table:
+        # the listing must return unescaped values and the script must
+        # escape them as SQL literals, or the replay restores different
+        # partitions (or none: the lookup of an escaped name fails).
+        from hive_ddl_extract_tool_spark.catalog.extractor import (
+            get_partitions, get_table_location, relative_location)
+        assert "dbhostq" not in {workdir!r} and "dbhostr" not in {workdir!r}
+        vals = {HOSTILE_PARTITION_VALUES!r}
+        spark.sql("CREATE DATABASE dbhostq")
+        spark.sql("CREATE TABLE dbhostq.t (v INT) PARTITIONED BY (a STRING, b STRING) "
+                  "STORED AS PARQUET")
+        spark.conf.set("hive.exec.dynamic.partition.mode", "nonstrict")
+        rows = [(i, a, b) for i, (a, b) in enumerate(zip(vals, reversed(vals)))]
+        spark.createDataFrame(rows, "v INT, a STRING, b STRING").write.insertInto("dbhostq.t")
+        add3 = extract_ddl(spark, "dbhostq", "*", None, ExtractConfig(use_add_sql=True))
+        assert add3.count("ADD PARTITION") == len(vals), add3
+        stmts3 = [s.strip() for s in "\\n".join(
+            ln for ln in add3.replace("dbhostq", "dbhostr").splitlines()
+            if not ln.startswith("--")
+        ).split(";") if s.strip()]
+        for s in stmts3:
+            spark.sql(s)
+        def listing(db):
+            root = get_table_location(spark, db, "t")
+            return ([r[0] for r in spark.sql("SHOW PARTITIONS " + db + ".t").collect()],
+                    [(spec, relative_location(loc, root))
+                     for spec, loc in get_partitions(spark, db, "t")])
+        src3, dst3 = listing("dbhostq"), listing("dbhostr")
+        assert src3 == dst3, (src3, dst3)
+        assert sorted(v for spec, _ in src3[1] for _, v in spec) == sorted(vals * 2)
+        again = extract_ddl(spark, "dbhostr", "*", None, ExtractConfig(use_add_sql=True))
+        assert canon(add3, "dbhostq") == canon(again, "dbhostr"), (add3, again)
         print("HIVE_METASTORE_OK")
     """)
 
@@ -143,7 +186,8 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
         "line": ("OK   §2A catalog fixpoint: Derby metastore extract -> apply "
                  "-> re-extract identical, ctx+abs (AS SERDE, ADD PARTITION "
                  "x2, MSCK; use_context=False arm: qualified names + "
-                 "absolute locations on an external table)"
+                 "absolute locations on an external table; hostile partition "
+                 "values arm)"
                  if ok else "FAIL §2A catalog fixpoint"),
         "stdout_tail": proc.stdout[-2000:],
         "stderr_tail": proc.stderr[-2000:],
