@@ -41,11 +41,19 @@ def _spin(n: int) -> int:
 
 def _make_prober():
     """Persistent process pool -> probe() measuring one 8-way spin. Returns
-    a no-op prober on any failure: telemetry must never break the bench."""
+    a no-op prober on any failure: telemetry must never break the bench.
+    The pool's workers are terminated and joined at interpreter exit."""
     try:
+        import atexit
         import multiprocessing as mp
 
         pool = mp.get_context("fork").Pool(PROBE_WORKERS)
+
+        def close() -> None:
+            pool.terminate()
+            pool.join()
+
+        atexit.register(close)
 
         def probe() -> float:
             t0 = time.perf_counter()

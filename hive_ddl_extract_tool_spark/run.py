@@ -62,52 +62,17 @@ def main(argv: list[str] | None = None) -> int:
         print(formatted_plan(df))
         return 0
     if args.check:
-        oracles = all_oracles()
-        if args.query not in oracles:
+        oracle = all_oracles().get(args.query)
+        if oracle is None:
             print(f"{args.query} is rows-only (no oracle); nothing to check", file=sys.stderr)
             return 2
-        import datetime as dt
-        import math
+        from .verify import check
 
-        import duckdb
-
-        from .tables import TABLES
-
-        def canon(v):
-            if v is None:
-                return "NULL"
-            if isinstance(v, bool):
-                return str(v)
-            if isinstance(v, float):
-                if math.isnan(v):
-                    return "NaN"
-                if v == int(v) and abs(v) < 1e15:
-                    return str(int(v))
-                return repr(v)
-            if isinstance(v, dt.datetime):
-                return v.replace(tzinfo=None).isoformat()
-            return str(v)
-
-        def canon_rows(cols, rows):
-            order = sorted(range(len(cols)), key=lambda i: cols[i])
-            return sorted(tuple(canon(r[i]) for i in order) for r in rows)
-
-        scols, srows = df.columns, [tuple(r) for r in df.collect()]
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
-        rel = con.sql(oracles[args.query])
-        ocols, orows = list(rel.columns), rel.fetchall()
-        ok = (
-            sorted(scols) == sorted(ocols)
-            and len(srows) == len(orows)
-            and canon_rows(scols, srows) == canon_rows(ocols, orows)
-        )
-        print(
-            f"{'OK' if ok else 'MISMATCH'}: {args.query} spark={len(srows)} rows, "
-            f"oracle={len(orows)} rows in {time.perf_counter() - t0:.2f}s"
-        )
-        return 0 if ok else 1
+        msg = check(df, oracle, args.sf_dir)
+        print(f"{'OK' if msg is None else 'MISMATCH'}: {args.query} in {time.perf_counter() - t0:.2f}s")
+        if msg is not None:
+            print(msg)
+        return 0 if msg is None else 1
     df.show(args.limit, truncate=False)
     n = df.count()
     print(f"{n} rows in {time.perf_counter() - t0:.2f}s ({args.query} @ {args.sf_dir})")

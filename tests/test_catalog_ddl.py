@@ -89,6 +89,17 @@ def test_sql_emission_context_variants():
     assert odd.endswith(' LOCATION "/data/x\\"y\\\'z";')
 
 
+def test_identifiers_are_quoted_only_when_needed():
+    assert msck_sql("123", "1e3", use_context=True) == "MSCK REPAIR TABLE `1e3`;"
+    assert msck_sql("123", "_t9", use_context=False) == "MSCK REPAIR TABLE `123`._t9;"
+    assert msck_sql("a`b", "t-1", use_context=False) == "MSCK REPAIR TABLE `a``b`.`t-1`;"
+    assert format_partition_spec((("1d", "x"), ("d t", "y"), ("Dt", "z"))) == (
+        "`1d`='x',`d t`='y',Dt='z'"
+    )
+    add = add_partition_sql("d", "1e3", "/wh/t", (("1d", "x"),), "/wh/t/1d=x", False)
+    assert add == 'ALTER TABLE d.`1e3` ADD PARTITION (`1d`=\'x\') LOCATION "/wh/t/1d=x";'
+
+
 # --------------------------------------------------------------------------
 # Pipeline against a live catalog (fixture tables per FIXTURES.md §2)
 # --------------------------------------------------------------------------
@@ -338,6 +349,14 @@ def test_cli_contract(spark, ddl_fixtures, tmp_path):
     assert "other_t" in text
 
 
+def _replay(spark, script):
+    """Run every statement of an extracted script, comment lines skipped."""
+    body = "\n".join(ln for ln in script.splitlines() if not ln.startswith("--"))
+    for stmt in body.split(";"):
+        if stmt.strip():
+            spark.sql(stmt)
+
+
 def test_hostile_partition_values_round_trip(spark):
     """Partition values whose directory names are escaped (quote, '/', '=',
     '%', backslash, double quote, timestamp colons) survive extract ->
@@ -355,12 +374,7 @@ def test_hostile_partition_values_round_trip(spark):
         spark.createDataFrame(rows, "v INT, a STRING, b STRING").write.insertInto(f"{src}.t")
         script = extract_ddl(spark, src, "*", None, ExtractConfig(use_add_sql=True))
         assert script.count("ADD PARTITION") == len(vals)
-        body = "\n".join(
-            ln for ln in script.replace(src, dst).splitlines() if not ln.startswith("--")
-        )
-        for stmt in body.split(";"):
-            if stmt.strip():
-                spark.sql(stmt)
+        _replay(spark, script.replace(src, dst))
 
         def listing(db):
             root = get_table_location(spark, db, "t")
@@ -375,6 +389,44 @@ def test_hostile_partition_values_round_trip(spark):
         spark.catalog.setCurrentDatabase(current_db)
         spark.sql(f"DROP DATABASE IF EXISTS {src} CASCADE")
         spark.sql(f"DROP DATABASE IF EXISTS {dst} CASCADE")
+
+
+@pytest.mark.parametrize("use_add_sql", [False, True], ids=["msck", "add"])
+def test_identifiers_that_need_quoting_round_trip(spark, tmp_path, use_add_sql):
+    """Database ``123``, table ``1e3`` and partition column ``1d`` are not
+    plain identifiers: the script must backtick-quote them wherever it names
+    them, or its USE, MSCK and ALTER lines do not parse. (SHOW DATABASES
+    returns the first as ```123```, so it used to match no pattern and its
+    tables went missing from the script.) The table is external, so the
+    replay into a renamed database reads the same partition directories."""
+    current_db = spark.catalog.currentDatabase()  # the script's USE changes it
+    spark.sql("CREATE DATABASE `123`")
+    try:
+        spark.sql("CREATE TABLE `123`.`1e3` (v INT, `1d` STRING) USING parquet "
+                  f"PARTITIONED BY (`1d`) LOCATION '{tmp_path}/t'")
+        spark.sql("INSERT INTO `123`.`1e3` VALUES (1, 'x'), (2, 'y')")
+        assert list_databases(spark, "123") == ["123"]
+        script = extract_ddl(spark, "123", "*", None, ExtractConfig(use_add_sql=use_add_sql))
+        assert script.startswith("CREATE DATABASE IF NOT EXISTS `123`;\nUSE `123`;\n")
+        if use_add_sql:
+            assert "ALTER TABLE `1e3` ADD PARTITION (`1d`='x') LOCATION \"1d=x\";" in script
+        else:
+            assert "MSCK REPAIR TABLE `1e3`;" in script
+        _replay(spark, script.replace("`123`", "`456`"))
+
+        def listing(db):
+            root = get_table_location(spark, db, "1e3")
+            return [(spec, relative_location(loc, root))
+                    for spec, loc in get_partitions(spark, db, "1e3")]
+
+        assert listing("456") == listing("123") == [
+            ((("1d", "x"),), "1d=x"), ((("1d", "y"),), "1d=y"),
+        ]
+        assert spark.table("`456`.`1e3`").count() == 2
+    finally:
+        spark.catalog.setCurrentDatabase(current_db)
+        spark.sql("DROP DATABASE IF EXISTS `123` CASCADE")
+        spark.sql("DROP DATABASE IF EXISTS `456` CASCADE")
 
 
 # --------------------------------------------------------------------------

@@ -9,14 +9,12 @@ identical canonicalized result on each affected query.
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from hive_ddl_extract_tool_spark.operators import all_oracles, all_queries
-
-from .parity import _canon_rows
+from hive_ddl_extract_tool_spark.verify import check
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -39,21 +37,8 @@ def _write_docs(path, texts):
 
 
 def _assert_parity(spark, sf_dir, name):
-    sdf = QUERIES[name](spark, str(sf_dir))
-    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    try:
-        con.sql(
-            f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-        )
-        rel = con.sql(ORACLES[name])
-        ocols, orows = list(rel.columns), rel.fetchall()
-    finally:
-        con.close()
-    assert sorted(scols) == sorted(ocols), f"{name}: column mismatch"
-    assert _canon_rows(scols, srows) == _canon_rows(ocols, orows), (
-        f"{name}: value mismatch on hostile docs\nspark={srows}\noracle={orows}"
-    )
+    msg = check(QUERIES[name](spark, str(sf_dir)), ORACLES[name], str(sf_dir))
+    assert msg is None, f"{name} on hostile docs: {msg}"
 
 
 HOSTILE_TEXTS = [

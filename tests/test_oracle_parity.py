@@ -7,8 +7,7 @@ from __future__ import annotations
 import pytest
 
 from hive_ddl_extract_tool_spark.operators import all_oracles, all_queries
-
-from .parity import compare
+from hive_ddl_extract_tool_spark.verify import check
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -21,8 +20,8 @@ def test_every_oracle_has_a_query():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_parity(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    compare(df, ORACLES[name], sf_dir)
+    msg = check(QUERIES[name](spark, sf_dir), ORACLES[name], sf_dir)
+    assert msg is None, msg
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -7,7 +7,6 @@ results stay correct.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hive_ddl_extract_tool_spark.operators import all_queries
@@ -182,15 +181,7 @@ def test_q42_dsc_stage_is_one_exchange(spark, sf_dir):
 
     clear_cache()
     cand = d._lsh_candidates(spark, sf_dir)
-    cand_docs = cand.select(F.col("doc_a").alias("doc_id")).union(cand.select("doc_b"))
-    build = (
-        d._doc_shingles_raw(spark, sf_dir)
-        .join(cand_docs, "doc_id", "semi")
-        .repartition("doc_id")
-        .distinct()
-        .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-    )
-    plan = formatted_plan(build)
+    plan = formatted_plan(d._cand_shingle_build(spark, sf_dir, cand))
     assert plan.count("Exchange hashpartitioning") <= 2, (
         f"dedup/size chain shuffles beyond the doc_id repartition:\n{plan}"
     )
@@ -383,14 +374,14 @@ def test_semdedup_salting_preserves_pair_set(spark, sf_dir):
     pairwise SQL -- salting changes the exchange key, never the pairs."""
     import hive_ddl_extract_tool_spark.operators.similarity as sim
     from hive_ddl_extract_tool_spark.operators._cache import clear_cache
-    from .parity import compare
+    from hive_ddl_extract_tool_spark.verify import check
 
     old = sim.SEMDEDUP_CELL_CAP
     sim.SEMDEDUP_CELL_CAP = 2
     try:
         clear_cache()
-        df = QUERIES["q103_semdedup"](spark, sf_dir)
-        compare(df, sim.ORACLE_Q103, sf_dir)
+        msg = check(QUERIES["q103_semdedup"](spark, sf_dir), sim.ORACLE_Q103, sf_dir)
+        assert msg is None, msg
     finally:
         sim.SEMDEDUP_CELL_CAP = old
         clear_cache()

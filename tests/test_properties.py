@@ -23,17 +23,27 @@ _ident = st.text(alphabet=string.ascii_lowercase + string.digits + "_", min_size
 _value = st.text(
     alphabet=string.ascii_letters + string.digits + "-_. '\"\\,=/%:", min_size=1, max_size=12
 )
-# one k='v' clause of a spec; inside the quotes a backslash escapes any char
-_SPEC_CLAUSE = re.compile(r"([a-z0-9_]+)='((?:[^'\\]|\\.)*)'(?:,|$)")
+# partition column names, including ones that need backtick quoting
+_column = st.text(alphabet=string.ascii_lowercase + string.digits + "_ `", min_size=1, max_size=12)
+# one k='v' clause of a spec: k is a plain identifier or a backtick-quoted
+# name with backticks doubled; inside the quotes a backslash escapes any char
+_SPEC_CLAUSE = re.compile(r"([a-z_][a-z0-9_]*|`(?:[^`]|``)+`)='((?:[^'\\]|\\.)*)'(?:,|$)")
 
 
-@given(st.lists(st.tuples(_ident, _value), min_size=1, max_size=4))
+def _unquote(name: str) -> str:
+    return name[1:-1].replace("``", "`") if name.startswith("`") else name
+
+
+@given(st.lists(st.tuples(_column, _value), min_size=1, max_size=4))
 def test_format_partition_spec_structure(kvs):
     spec = format_partition_spec(tuple(kvs))
     clauses = list(_SPEC_CLAUSE.finditer(spec))
     assert "".join(m.group(0) for m in clauses) == spec
-    parsed = [(m.group(1), re.sub(r"\\(.)", r"\1", m.group(2))) for m in clauses]
+    parsed = [(_unquote(m.group(1)), re.sub(r"\\(.)", r"\1", m.group(2))) for m in clauses]
     assert parsed == kvs
+    # quoted exactly when the name is not a plain identifier
+    plain = [re.fullmatch(r"[a-z_][a-z0-9_]*", k) is not None for k, _ in kvs]
+    assert [not m.group(1).startswith("`") for m in clauses] == plain
 
 
 @given(_ident, _ident)

@@ -1,21 +1,18 @@
 """Property tests for the verification infrastructure itself: the shared
-canon/hash (tools/verify_lib.py) and the corpus-inflation invariants that
-every at-scale gate (scale_stress, x10_smoke, x10_oracle) leans on.
+canon/hash (hive_ddl_extract_tool_spark/verify.py) and the corpus-inflation
+invariants that every at-scale gate (scale_stress, x10_smoke, x10_oracle)
+leans on.
 
 A defect HERE silently corrupts the evidence, not the engine -- which is
 exactly why it gets the hypothesis treatment rather than a spot check."""
 from __future__ import annotations
 
-import os
 import re
-import sys
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.verify_lib import canon, hash_rows
+from hive_ddl_extract_tool_spark.verify import canon, hash_rows
 
 # the scalar universe the driver's comparator actually sees
 _CELL = st.one_of(

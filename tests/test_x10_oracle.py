@@ -3,9 +3,9 @@
 The gate itself runs out-of-band (K=10 at sf0.1 -> X10_ORACLE.json); these
 tests pin the pieces that keep it honest at fixture cost:
 
-- verify_lib's canon is TYPE-SENSITIVE (the whole point of sharing it
-  between drive_driver and x10_oracle is that neither compare can drift
-  into type-folding);
+- the shared canon (hive_ddl_extract_tool_spark/verify.py) is
+  TYPE-SENSITIVE, also inside list cells, so no compare can drift into
+  type-folding;
 - the scaled-cells DuckDB init relation degenerates to the registered
   fixture contract at k=1 (same ci numbering, same vectors), so the
   scaled oracle is anchored to the already-adjudicated q103 oracle.
@@ -20,8 +20,8 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hive_ddl_extract_tool_spark.verify import canon, diff, hash_rows, register_views
 from tests.conftest import SF_DIR
-from tools.verify_lib import canon, compare, hash_rows
 from tools.x10_oracle import scaled_cent0_sql
 
 
@@ -32,22 +32,12 @@ def test_canon_is_type_sensitive():
     assert canon(float("nan")) == "float:NaN"
     # tz-aware and naive datetimes canonicalize to the same wall-clock
     ts = datetime.datetime(2026, 1, 2, 3, 4, 5)
-    assert canon(ts) == canon(ts.replace(tzinfo=datetime.timezone.utc))
-
-
-def test_canon_agrees_with_test_parity_canon_on_scalars():
-    """tests/parity.py keeps a superset canon (date/list branches, diff
-    samples) for assertion messages; on the scalar types both handle, it
-    must agree with the shared verify_lib canon or the pytest gate and the
-    driver-mirror gates drift apart."""
-    from tests.parity import _canon_cell
-
-    samples = [None, True, False, 0, 5, -3, 0.0, 5.0, float("nan"),
-               float("inf"), "x", "5",
-               datetime.datetime(2026, 1, 2, 3, 4, 5),
-               datetime.datetime(2026, 1, 2, tzinfo=datetime.timezone.utc)]
-    for v in samples:
-        assert canon(v) == _canon_cell(v), f"canon drift on {v!r}"
+    aware = ts.replace(tzinfo=datetime.timezone.utc)
+    assert canon(ts) == canon(aware)
+    # list cells canonicalize element by element, with the same rules
+    assert canon([ts]) == canon([aware])
+    assert canon([1]) != canon([1.0])
+    assert canon((True, None)) == canon([True, None]) != canon([1, None])
 
 
 def test_hash_rows_is_order_insensitive_but_value_strict():
@@ -57,8 +47,11 @@ def test_hash_rows_is_order_insensitive_but_value_strict():
     # column-name sort means (a=x, b=1) must hash like rows under ["a","b"]
     assert hash_rows(cols, rows) == hash_rows(["a", "b"], [("x", 1), ("y", 2)])
     assert hash_rows(cols, rows) != hash_rows(cols, [(1, "x"), (2, "z")])
-    assert compare(cols, rows, ["a", "b"], [("x", 1), ("y", 2)])
-    assert not compare(cols, rows, ["a", "c"], [("x", 1), ("y", 2)])
+    assert diff(cols, rows, ["a", "b"], [("x", 1), ("y", 2)]) is None
+    assert "column mismatch" in diff(cols, rows, ["a", "c"], [("x", 1), ("y", 2)])
+    assert "row count mismatch" in diff(cols, rows, cols, rows[:1])
+    msg = diff(cols, rows, cols, [(1, "x"), (2.0, "y")])
+    assert "value mismatch (1 rows differ)" in msg and "float:2.0" in msg
 
 
 def test_inflate_all_doubles_every_table(spark, tmp_path):
@@ -142,9 +135,7 @@ def test_scaled_cent0_degenerates_to_fixture_contract_at_k1():
     from hive_ddl_extract_tool_spark.operators.similarity import _CENT0_SQL
 
     con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'"
-    )
+    register_views(con, SF_DIR)
     fixture = con.sql(
         f"SELECT ci, cv FROM {_CENT0_SQL} c ORDER BY ci"
     ).fetchall()

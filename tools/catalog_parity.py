@@ -20,7 +20,9 @@ on an external table whose location is db-neutral, so the same fixpoint
 criterion applies across the rename. A third arm replays a two-level
 table whose partition values need escaping (HOSTILE_PARTITION_VALUES):
 quotes, backslash, '/', '=', '%' and timestamp colons must come back as
-the same partitions at the same table-relative locations.
+the same partitions at the same table-relative locations. A fourth arm
+extracts and replays a database, table and partition column whose names
+need backtick quoting (`123`, `1e3`, `1d`), in the MSCK and ADD forms.
 
 Runs in a subprocess because spark.sql.catalogImplementation is static
 per JVM (the caller's session uses the in-memory catalog); the same
@@ -32,6 +34,7 @@ Usage: python tools/catalog_parity.py            # prints the one-liner
 
 from __future__ import annotations
 
+import os
 import shutil
 import subprocess
 import sys
@@ -39,7 +42,7 @@ import tempfile
 import textwrap
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Partition values that the metastore's directory names escape and that a
 # SQL string literal must escape; tests/test_catalog_ddl.py replays the
@@ -57,12 +60,9 @@ def scenario_script(workdir: str) -> str:
         import sys; sys.path.insert(0, {REPO!r})
         import os
         os.chdir({workdir!r})   # derby metastore_db lands here
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.builder.master("local[2]")
-                 .config("spark.sql.warehouse.dir", {workdir!r} + "/wh")
-                 .config("spark.ui.enabled", "false")
-                 .enableHiveSupport().getOrCreate())
-        spark.sparkContext.setLogLevel("ERROR")
+        from hive_ddl_extract_tool_spark.session import get_spark
+        spark = get_spark(app_name="catalog_parity", cpus=2, enable_hive=True,
+                          extra_conf={{"spark.sql.warehouse.dir": {workdir!r} + "/wh"}})
         assert spark.conf.get("spark.sql.catalogImplementation") == "hive"
         spark.sql("CREATE DATABASE hv")
         spark.sql("CREATE TABLE hv.t (a INT, dt STRING) PARTITIONED BY (dt) STORED AS PARQUET")
@@ -91,10 +91,10 @@ def scenario_script(workdir: str) -> str:
             spark.sql(s)
         assert [r[0] for r in spark.sql("SHOW PARTITIONS hv2.t").collect()] == ["dt=x", "dt=y"]
         dst = extract_ddl(spark, "hv2", "*", None, ExtractConfig(use_add_sql=True))
-        def canon(t, db):
+        def normalize_script(t, db):
             return "\\n".join(ln for ln in t.replace(db, "DB").splitlines()
                               if "transient_lastDdlTime" not in ln)
-        assert canon(add, "hv") == canon(dst, "hv2"), (add, dst)
+        assert normalize_script(add, "hv") == normalize_script(dst, "hv2"), (add, dst)
 
         # Second arm -- use_context=False (ExtractHiveDDL.java:268-274's
         # OTHER branch): qualified `db.table` names, NO `USE db;` header,
@@ -125,7 +125,7 @@ def scenario_script(workdir: str) -> str:
             spark.sql(s)
         assert [r[0] for r in spark.sql("SHOW PARTITIONS dbdstq.t").collect()] == ["dt=x", "dt=y"]
         dst2 = extract_ddl(spark, "dbdstq", "*", None, cfg_abs)
-        assert canon(add2, "dbsrcq") == canon(dst2, "dbdstq"), (add2, dst2)
+        assert normalize_script(add2, "dbsrcq") == normalize_script(dst2, "dbdstq"), (add2, dst2)
 
         # Third arm -- hostile partition values on a two-level Hive table:
         # the listing must return unescaped values and the script must
@@ -158,7 +158,39 @@ def scenario_script(workdir: str) -> str:
         assert src3 == dst3, (src3, dst3)
         assert sorted(v for spec, _ in src3[1] for _, v in spec) == sorted(vals * 2)
         again = extract_ddl(spark, "dbhostr", "*", None, ExtractConfig(use_add_sql=True))
-        assert canon(add3, "dbhostq") == canon(again, "dbhostr"), (add3, again)
+        assert normalize_script(add3, "dbhostq") == normalize_script(again, "dbhostr"), (add3, again)
+
+        # Fourth arm -- names that are not plain identifiers (database 123,
+        # table 1e3, partition column 1d) must come out backtick-quoted, in
+        # both the MSCK and the ADD PARTITION script. The table is external,
+        # so each replay into a renamed database finds the same directories.
+        from hive_ddl_extract_tool_spark.catalog.extractor import list_databases
+        ext4 = {workdir!r} + "/ext4/t"
+        spark.sql("CREATE DATABASE `123`")
+        spark.sql("CREATE EXTERNAL TABLE `123`.`1e3` (v INT) PARTITIONED BY (`1d` STRING) "
+                  "STORED AS PARQUET LOCATION '" + ext4 + "'")
+        spark.sql("INSERT INTO `123`.`1e3` PARTITION (`1d`='x') VALUES (1)")
+        assert list_databases(spark, "123") == ["123"]
+        def body(t, db):  # banner comments name the db unquoted
+            t = "\\n".join(ln for ln in t.splitlines() if not ln.startswith("--"))
+            return normalize_script(t, "`" + db + "`")
+        for add_sql, dst4 in ((False, "456"), (True, "789")):
+            cfg4 = ExtractConfig(use_add_sql=add_sql)
+            src4 = extract_ddl(spark, "123", "*", None, cfg4)
+            assert src4.startswith("CREATE DATABASE IF NOT EXISTS `123`;\\nUSE `123`;"), src4
+            restore = ("ALTER TABLE `1e3` ADD PARTITION (`1d`='x') LOCATION \\"1d=x\\";"
+                       if add_sql else "MSCK REPAIR TABLE `1e3`;")
+            assert restore in src4, src4
+            stmts4 = [s.strip() for s in "\\n".join(
+                ln for ln in src4.replace("`123`", "`" + dst4 + "`").splitlines()
+                if not ln.startswith("--")
+            ).split(";") if s.strip()]
+            for s in stmts4:
+                spark.sql(s)
+            shown = spark.sql("SHOW PARTITIONS `" + dst4 + "`.`1e3`").collect()
+            assert [r[0] for r in shown] == ["1d=x"], shown
+            again4 = extract_ddl(spark, dst4, "*", None, cfg4)
+            assert body(src4, "123") == body(again4, dst4), (src4, again4)
         print("HIVE_METASTORE_OK")
     """)
 
@@ -187,7 +219,7 @@ def run_fixpoint(workdir: str | None = None, timeout: int = 300) -> dict:
                  "-> re-extract identical, ctx+abs (AS SERDE, ADD PARTITION "
                  "x2, MSCK; use_context=False arm: qualified names + "
                  "absolute locations on an external table; hostile partition "
-                 "values arm)"
+                 "values arm; quoted identifiers arm)"
                  if ok else "FAIL §2A catalog fixpoint"),
         "stdout_tail": proc.stdout[-2000:],
         "stderr_tail": proc.stderr[-2000:],

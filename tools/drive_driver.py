@@ -1,101 +1,115 @@
 """Simulate the driver's verify at sf0.01 through __spark_entry__ only.
 
-Stricter than the driver is believed to be: the canonicalization is
-TYPE-SENSITIVE (a Python float never folds into an int, so a DuckDB
-HUGEINT->float64 style widening on one side is a guaranteed local FAIL —
-the round-4 driver-only divergence class reproduces here by construction).
-Also records PARITY.md: the exact duckdb version, parquet physical types,
-and per-query status, so a driver-sweep discrepancy can be diffed against
-what this environment saw.
+Every oracle-backed query is compared by `hive_ddl_extract_tool_spark.verify`,
+whose canonicalization is TYPE-SENSITIVE (a Python float never folds into an
+int, so a DuckDB HUGEINT->float64 style widening on one side is a guaranteed
+local FAIL -- the round-4 driver-only divergence class reproduces here by
+construction). Also records PARITY.md: the exact duckdb version, parquet
+physical types, and per-query status, so a driver-sweep discrepancy can be
+diffed against what this environment saw.
+
+    python tools/drive_driver.py      # SPARK_GRAFT_VERIFY_SF_DIR overrides sf0.01
 """
-import sys, time, glob, os
-sys.path.insert(0, "/root/repo")
-import duckdb
-import pyarrow.parquet as pq
+import os
+import sys
+import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 import __spark_entry__ as e
-from pyspark.sql import SparkSession
-from tools.verify_lib import TABLES, canon, hash_rows, register_views
-
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-
-df = e.entry(spark)
-rows = df.collect()
-print("ENTRY", len(rows), df.schema.simpleString())
-
-SF = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-register_views(con, SF)
+from hive_ddl_extract_tool_spark.verify import collect, diff, run_oracle
 
 
-# canon/hash_rows live in tools/verify_lib.py, shared with the 10x-corpus
-# oracle gate (tools/x10_oracle.py) so the two compares cannot drift.
+def sf_dir() -> str:
+    return os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
 
-parity = [f"# PARITY — local verify environment\n",
-          f"- duckdb {duckdb.__version__}; python {sys.version.split()[0]}; "
-          f"spark {spark.version}; sf_dir {SF}",
-          "\n## Parquet physical schema at verify time\n"]
-for t in TABLES:
-    s = pq.read_schema(f"{SF}/{t}.parquet")
-    cols = ", ".join(f"{f.name}:{f.type}" for f in s)
-    parity.append(f"- **{t}**: {cols}")
-parity.append("\n## Per-query (type-strict canon)\n")
 
-qs, os_ = e.queries(), e.oracle_sql()
-fails = 0
-timings = []
-for name in sorted(qs):
-    t0 = time.time()
-    sdf = qs[name](spark, SF)
-    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-    dt = time.time() - t0
-    timings.append((name, dt))
-    if name in os_:
-        rel = con.sql(os_[name]); ocols, orows = list(rel.columns), rel.fetchall()
-        ok = (sorted(scols)==sorted(ocols) and len(srows)==len(orows)
-              and hash_rows(scols,srows)==hash_rows(ocols,orows))
-        print(f"{'OK  ' if ok else 'FAIL'} {name} rows={len(srows)} ({dt:.1f}s)")
-        parity.append(f"- {'OK' if ok else 'FAIL'} {name} rows={len(srows)}")
-        fails += 0 if ok else 1
-    else:
-        print(f"ROWS {name} rows={len(srows)} ({dt:.1f}s)")
-        parity.append(f"- ROWS {name} rows={len(srows)}")
-print("FAILS:", fails)
+def sweep(spark, sf: str, names) -> list[tuple[str, str, int, float]]:
+    """Run each named queries() entry and compare it with its oracle, if it
+    has one. Returns (status, name, rows, seconds) per query, status being
+    OK, FAIL or ROWS (no oracle); prints one line per query as it goes."""
+    qs, oracles = e.queries(), e.oracle_sql()
+    results = []
+    for name in names:
+        t0 = time.time()
+        scols, srows = collect(qs[name](spark, sf))
+        dt = time.time() - t0
+        msg = None
+        if name not in oracles:
+            status = "ROWS"
+        else:
+            msg = diff(scols, srows, *run_oracle(oracles[name], sf))
+            status = "OK" if msg is None else "FAIL"
+        print(f"{status:4} {name} rows={len(srows)} ({dt:.1f}s)")
+        if msg:
+            print(msg)
+        results.append((status, name, len(srows), dt))
+    return results
 
-# Sweep profile: the round-over-round regression signal BASELINE.md's
-# "Full-sweep series" table tracks (a staging cache that stops hitting
-# shows up here long before it hurts the sf0.1 headline bench).
-total = sum(t for _, t in timings)
-heavy = sorted(timings, key=lambda x: -x[1])[:10]
-heavy_s = ", ".join(f"{n} {t:.1f}s" for n, t in heavy)
-print(f"SWEEP total={total:.1f}s queries={len(timings)} heaviest: {heavy_s}")
-parity.append(f"Sweep profile: {len(timings)} queries, {total:.1f} s total; "
-              f"heaviest: {heavy_s}\n")
 
-# §2A per-round evidence (round-8 verdict, Next item 4): the catalog
-# extraction migration fixpoint against a real Derby metastore, so the
-# reference's own capability gets a dated parity row every round, not
-# just a pytest green that never rotates.
-from tools.catalog_parity import run_fixpoint
+def profile(results) -> str:
+    """Total and the ten heaviest queries of a sweep: the round-over-round
+    regression signal BASELINE.md's "Full-sweep series" table tracks (a
+    staging cache that stops hitting shows up here long before it hurts the
+    sf0.1 headline bench)."""
+    total = sum(dt for *_, dt in results)
+    heavy = sorted(results, key=lambda r: -r[3])[:10]
+    heavy_s = ", ".join(f"{name} {dt:.1f}s" for _, name, _, dt in heavy)
+    return f"total={total:.1f}s queries={len(results)} heaviest: {heavy_s}"
 
-try:
-    cat = run_fixpoint()
-except Exception as exc:  # a hung/killed Derby subprocess must not cost the sweep's parity evidence
-    cat = {"ok": False, "sec": -1.0,
-           "line": f"FAIL §2A catalog fixpoint ({type(exc).__name__}: {exc})"}
-print(f"{cat['line']} ({cat['sec']}s)")
-parity.append("## §2A catalog fixpoint\n")
-parity.append(f"- {cat['line']} ({cat['sec']}s)\n")
-fails += 0 if cat["ok"] else 1
 
-# The recorded FAILS is the COMBINED total (sweep + §2A), appended only
-# after both gates have run -- writing it mid-stream understated a §2A
-# failure (the exit code flipped but the recorded count stayed 0).
-parity.append(f"FAILS: {fails}\n")
+def main() -> int:
+    import duckdb
+    import pyarrow.parquet as pq
 
-with open("/root/repo/PARITY.md", "w") as f:
-    f.write("\n".join(parity))
-sys.exit(1 if fails else 0)
+    from hive_ddl_extract_tool_spark.session import get_spark
+    from hive_ddl_extract_tool_spark.tables import TABLES
+    from tools.catalog_parity import run_fixpoint
+
+    spark = get_spark(app_name="drive_driver")
+    df = e.entry(spark)
+    rows = df.collect()
+    print("ENTRY", len(rows), df.schema.simpleString())
+
+    sf = sf_dir()
+    parity = ["# PARITY — local verify environment\n",
+              f"- duckdb {duckdb.__version__}; python {sys.version.split()[0]}; "
+              f"spark {spark.version}; sf_dir {sf}",
+              "\n## Parquet physical schema at verify time\n"]
+    for t in TABLES:
+        s = pq.read_schema(f"{sf}/{t}.parquet")
+        cols = ", ".join(f"{f.name}:{f.type}" for f in s)
+        parity.append(f"- **{t}**: {cols}")
+    parity.append("\n## Per-query (type-strict canon)\n")
+
+    results = sweep(spark, sf, sorted(e.queries()))
+    parity += [f"- {status} {name} rows={n}" for status, name, n, _ in results]
+    fails = sum(status == "FAIL" for status, *_ in results)
+    print("FAILS:", fails)
+    print(f"SWEEP {profile(results)}")
+    parity.append(f"Sweep profile: {profile(results)}\n")
+
+    # §2A per-round evidence: the catalog extraction migration fixpoint
+    # against a real Derby metastore, so the reference's own capability
+    # gets a dated parity row every round, not just a pytest green.
+    try:
+        cat = run_fixpoint()
+    except Exception as exc:  # a hung/killed Derby subprocess must not cost the sweep's parity evidence
+        cat = {"ok": False, "sec": -1.0,
+               "line": f"FAIL §2A catalog fixpoint ({type(exc).__name__}: {exc})"}
+    print(f"{cat['line']} ({cat['sec']}s)")
+    parity.append("## §2A catalog fixpoint\n")
+    parity.append(f"- {cat['line']} ({cat['sec']}s)\n")
+    fails += 0 if cat["ok"] else 1
+
+    # The recorded FAILS is the COMBINED total (sweep + §2A), appended only
+    # after both gates have run.
+    parity.append(f"FAILS: {fails}\n")
+    with open(os.path.join(REPO, "PARITY.md"), "w") as f:
+        f.write("\n".join(parity))
+    return 1 if fails else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -4,71 +4,33 @@ The external driver sweeps ``__spark_entry__.queries()`` in dict order
 under a wall-clock budget (~200 s has historically yielded ~50 rows), so
 a rotation that stages 50 slow queries can silently truncate below the
 freshness need. This tool runs ONLY the first ``--n`` registry-order
-queries through the same Spark+DuckDB compare loop as tools/drive_driver.py
+queries through tools/drive_driver.py's sweep (same Spark+DuckDB compare)
 and prints the projected prefix cost, so the rotation is committed against
 a measured number instead of hope (round-10 verdict, Next item 2).
 
-    python tools/measure_prefix.py [--n 50]
+    python tools/measure_prefix.py [--n 50]   # SPARK_GRAFT_VERIFY_SF_DIR overrides sf0.01
 """
 
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
 import __spark_entry__ as e
-from pyspark.sql import SparkSession
-from tools.verify_lib import hash_rows, register_views
+from hive_ddl_extract_tool_spark.session import get_spark
+from tools.drive_driver import profile, sf_dir, sweep
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=50)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    sf = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    register_views(con, sf)
-
-    qs, os_ = e.queries(), e.oracle_sql()
-    staged = list(qs)[: args.n]
-    fails = 0
-    timings = []
-    for name in staged:
-        t0 = time.time()
-        sdf = qs[name](spark, sf)
-        scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
-        dt = time.time() - t0
-        timings.append((name, dt))
-        if name in os_:
-            rel = con.sql(os_[name])
-            ocols, orows = list(rel.columns), rel.fetchall()
-            ok = (
-                sorted(scols) == sorted(ocols)
-                and len(srows) == len(orows)
-                and hash_rows(scols, srows) == hash_rows(ocols, orows)
-            )
-            print(f"{'OK  ' if ok else 'FAIL'} {name} rows={len(srows)} ({dt:.1f}s)")
-            fails += 0 if ok else 1
-        else:
-            print(f"ROWS {name} rows={len(srows)} ({dt:.1f}s)")
-    total = sum(t for _, t in timings)
-    heavy = sorted(timings, key=lambda x: -x[1])[:10]
-    heavy_s = ", ".join(f"{n} {t:.1f}s" for n, t in heavy)
-    print(f"PREFIX total={total:.1f}s queries={len(timings)} fails={fails} heaviest: {heavy_s}")
+    spark = get_spark(app_name="measure_prefix")
+    results = sweep(spark, sf_dir(), list(e.queries())[: args.n])
+    fails = sum(status == "FAIL" for status, *_ in results)
+    print(f"PREFIX fails={fails} {profile(results)}")
     return 1 if fails else 0
 
 

@@ -8,7 +8,7 @@ suffixes every word with ``x{j}``; embeddings rotate by j), so DuckDB can
 compute the SAME answers on the SAME inflated parquet. This tool runs one
 representative per family on both engines at K (default 10) and applies
 the driver's exact pass rule (schema names + row count + type-strict value
-hash, shared via tools/verify_lib.py), upgrading "executes at scale" to
+hash, from hive_ddl_extract_tool_spark/verify.py), upgrading "executes at scale" to
 "is correct at scale":
 
 - q40 exact dedup            (the one-hash-shuffle floor)
@@ -92,8 +92,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from hive_ddl_extract_tool_spark.verify import collect, diff, hash_rows, register_views
 from tools.scale_stress import VEC_STRIDE, inflate
-from tools.verify_lib import hash_rows, register_views
 
 
 def scaled_cent0_sql(k: int) -> str:
@@ -108,19 +108,16 @@ def scaled_cent0_sql(k: int) -> str:
 
 def check(name, sdf, con, sql):
     t0 = time.monotonic()
-    scols, srows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    scols, srows = collect(sdf)
     t_spark = round(time.monotonic() - t0, 2)
     t0 = time.monotonic()
     rel = con.sql(sql)
     ocols, orows = list(rel.columns), rel.fetchall()
     t_duck = round(time.monotonic() - t0, 2)
-    # the driver's pass rule, with each side hashed exactly once
-    hs, ho = hash_rows(scols, srows), hash_rows(ocols, orows)
-    ok = sorted(scols) == sorted(ocols) and len(srows) == len(orows) and hs == ho
     return {
-        "query": name, "match": ok,
+        "query": name, "match": diff(scols, srows, ocols, orows) is None,
         "rows_spark": len(srows), "rows_oracle": len(orows),
-        "hash_spark": hs, "hash_oracle": ho,
+        "hash_spark": hash_rows(scols, srows), "hash_oracle": hash_rows(ocols, orows),
         "sec_spark": t_spark, "sec_duck": t_duck,
     }
 
